@@ -323,7 +323,7 @@ def main() -> None:
             sys.executable, os.path.join(_here, "bench", "cdc_bench.py"),
             "--cpus", str(cpus), "--keys", "300000",
             "--events", "1000000", "--epochs", "4", "--mode", mode,
-            "--sha", "arrow", "--warmup-epochs", "1",
+            "--warmup-epochs", "1",
         ], timeout=1800)
 
     # clean-history floors at (1M events, 4 epochs, local[32]): measured

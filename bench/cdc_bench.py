@@ -86,8 +86,7 @@ def _gc_flags(cpus: int) -> str:
 
 
 def run(cpus: int, n_keys: int, n_events: int, n_epochs: int,
-        num_buckets: int | None = None, salt_buckets: int = 8,
-        sha_impl: str = "arrow", merge_mode: str = "cow",
+        num_buckets: int | None = None, merge_mode: str = "cow",
         compact_every: int = 4, warmup_epochs: int = 0,
         shuffle_partitions: int | None = None,
         events_dir: str | None = None,
@@ -185,7 +184,7 @@ def run(cpus: int, n_keys: int, n_events: int, n_epochs: int,
                                  merge_mode=merge_mode)
         for ep in epochs[:warmup_epochs]:
             apply_epoch(wlake, ev.filter(F.col("epoch") == ep).drop("epoch"),
-                        int(ep), None, salt_buckets, sha_impl)
+                        int(ep))
         wlake.compact(target_files_per_bucket=1)
         shutil.rmtree(wdir, ignore_errors=True)
 
@@ -265,9 +264,7 @@ def run(cpus: int, n_keys: int, n_events: int, n_epochs: int,
         def one(ep: int) -> dict:
             te = time.monotonic()
             stats = apply_epoch(
-                lake, ev.filter(F.col("epoch") == ep).drop("epoch"), int(ep),
-                None, salt_buckets, sha_impl,
-            )
+                lake, ev.filter(F.col("epoch") == ep).drop("epoch"), int(ep))
             stats["_leg_wall"] = round(time.monotonic() - te, 3)
             return stats
 
@@ -291,9 +288,7 @@ def run(cpus: int, n_keys: int, n_events: int, n_epochs: int,
         for i, ep in enumerate(epochs):
             te = time.monotonic()
             stats = apply_epoch(
-                lake, ev.filter(F.col("epoch") == ep).drop("epoch"), int(ep),
-                None, salt_buckets, sha_impl,
-            )
+                lake, ev.filter(F.col("epoch") == ep).drop("epoch"), int(ep))
             per_epoch.append(round(time.monotonic() - te, 3))
             if detail:
                 epoch_detail.append({k: stats.get(k) for k in
@@ -357,8 +352,6 @@ if __name__ == "__main__":
     ap.add_argument("--events", type=int, default=2_000_000)
     ap.add_argument("--epochs", type=int, default=8)
     ap.add_argument("--buckets", type=int, default=None)
-    ap.add_argument("--salt", type=int, default=8)
-    ap.add_argument("--sha", choices=["arrow", "jvm"], default="arrow")
     ap.add_argument("--mode", choices=["cow", "mor"], default="cow")
     ap.add_argument("--compact-every", type=int, default=4)
     ap.add_argument("--warmup-epochs", type=int, default=0)
@@ -374,9 +367,7 @@ if __name__ == "__main__":
                          "must be its actual row count")
     args = ap.parse_args()
     res = run(args.cpus, args.keys, args.events, args.epochs, args.buckets,
-              args.salt, args.sha, args.mode, args.compact_every,
+              args.mode, args.compact_every,
               args.warmup_epochs, args.shuffle_partitions, args.events_dir,
               args.in_flight)
-    res["sha_impl"] = args.sha
-    res["salt_buckets"] = args.salt
     print(json.dumps(res))

@@ -78,7 +78,6 @@ def main() -> None:
     ap.add_argument("--epochs", type=int, default=4)
     ap.add_argument("--mode", default="mor")
     ap.add_argument("--warmup", type=int, default=2)
-    ap.add_argument("--sha", choices=["arrow", "jvm"], default="jvm")
     ap.add_argument("--fixed-shuffle", type=int, default=128)
     ap.add_argument("--in-flight", type=int, default=1,
                     help="concurrent epoch applies per leg (backfill mode)")
@@ -172,7 +171,7 @@ def main() -> None:
     if args.in_flight > 1:
         layout += f"_if{args.in_flight}"
     sig = (f"n{args.n}_k{args.keys}_e{args.events}_p{args.epochs}"
-           f"_{args.mode}_{args.sha}_{layout}")
+           f"_{args.mode}_{layout}")
 
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     hist_path = os.path.join(REPO, "BENCH", "scaling_history.jsonl")
@@ -211,7 +210,7 @@ def main() -> None:
 
     def leg(cpus: int) -> dict | None:
         r = run_one(cpus, args.keys, args.events, args.epochs, args.mode,
-                    args.warmup, args.sha, args.fixed_shuffle,
+                    args.warmup, args.fixed_shuffle,
                     args.in_flight)
         if r is None:
             return None

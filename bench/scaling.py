@@ -150,13 +150,13 @@ def wait_quiet(threshold: float = 0.02, window_s: float = 10.0,
 
 
 def run_one(cpus: int, keys: int, events: int, epochs: int, mode: str,
-            warmup: int, sha: str, fixed_shuffle: int | None = None,
+            warmup: int, fixed_shuffle: int | None = None,
             in_flight: int = 1) -> dict:
     cmd = [
         sys.executable, os.path.join(REPO, "bench", "cdc_bench.py"),
         "--cpus", str(cpus), "--keys", str(keys), "--events", str(events),
         "--epochs", str(epochs), "--mode", mode,
-        "--warmup-epochs", str(warmup), "--sha", sha,
+        "--warmup-epochs", str(warmup),
     ]
     if fixed_shuffle:
         cmd += ["--shuffle-partitions", str(fixed_shuffle)]
@@ -193,13 +193,6 @@ def main() -> None:
     ap.add_argument("--mode", default="mor")
     ap.add_argument("--warmup", type=int, default=2)
     ap.add_argument("--reps", type=int, default=2)
-    # jvm sha keeps ALL compute inside the measured local[N] thread pool;
-    # the Arrow path offloads normalization to Python worker processes that
-    # are NOT bounded by local[N], inflating the small-N throughput and
-    # understating scaling efficiency (measured: arrow local[8] 351k vs jvm
-    # 288k events/s on identical input — the delta is Python processes
-    # running on cores outside the N budget)
-    ap.add_argument("--sha", choices=["arrow", "jvm"], default="jvm")
     ap.add_argument("--wait-quiet", action="store_true",
                     help="gate each run on a low-steal window (<2%% over 10s)")
     # identical-job mode: pin the shuffle/file layout at BOTH cluster sizes
@@ -223,13 +216,13 @@ def main() -> None:
     layout = (f"sp{args.fixed_shuffle}" if args.fixed_shuffle
               else f"s{smult}f{fmult}")
     sig = (f"n{args.n}_k{args.keys}_e{args.events}_p{args.epochs}"
-           f"_{args.mode}_{args.sha}_{layout}")
+           f"_{args.mode}_{layout}")
 
     smalls, bigs = [], []
     for _ in range(args.reps):
         pre = wait_quiet() if args.wait_quiet else None
         r = run_one(args.n, args.keys, args.events, args.epochs,
-                    args.mode, args.warmup, args.sha, args.fixed_shuffle)
+                    args.mode, args.warmup, args.fixed_shuffle)
         if r is not None:
             r["pre_steal_frac"] = pre
             r["sig"] = sig
@@ -238,7 +231,7 @@ def main() -> None:
                 f.write(json.dumps(r) + "\n")
         pre = wait_quiet() if args.wait_quiet else None
         r = run_one(args.n * 4, args.keys, args.events, args.epochs,
-                    args.mode, args.warmup, args.sha, args.fixed_shuffle)
+                    args.mode, args.warmup, args.fixed_shuffle)
         if r is not None:
             r["pre_steal_frac"] = pre
             r["sig"] = sig
@@ -311,9 +304,8 @@ job (binlog -> lake upsert replay, merge mode `{args.mode}`), identical input
 seed=42, one hot repo at 35% of events), two parallelism levels in separate
 JVMs, {args.warmup} untimed warmup epochs per run (JIT/codegen — a
 10^10-event stream runs warm), memory held at 2 GiB/core (a 4N cluster has
-4N memory), sha impl `{args.sha}` (jvm keeps all compute inside the
-measured local[N] pool; the Arrow path's Python workers are not
-core-bounded and would inflate the small-N number). Headline pair = best
+4N memory); the Arrow sha path's Python workers are not core-bounded
+and inflate the small-N number. Headline pair = best
 steady rate PER CONFIG across all runs of this exact protocol signature in
 `BENCH/scaling_history.jsonl` ({len(smalls)} small / {len(bigs)} big legs,
 each leg gated on a <2% loaded-steal window when --wait-quiet): the shared

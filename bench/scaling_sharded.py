@@ -90,12 +90,12 @@ def _shm_copy(src: str, sig: str) -> str:
 
 
 def leg_cmd(events_dir: str, n_events: int, epochs: int, mode: str,
-            warmup: int, sha: str, sp: int, cores: int = 4) -> list[str]:
+            warmup: int, sp: int, cores: int = 4) -> list[str]:
     return [
         sys.executable, os.path.join(REPO, "bench", "cdc_bench.py"),
         "--cpus", str(cores), "--keys", "300000", "--events", str(n_events),
         "--epochs", str(epochs), "--mode", mode,
-        "--warmup-epochs", str(warmup), "--sha", sha,
+        "--warmup-epochs", str(warmup),
         "--shuffle-partitions", str(sp),
         "--events-dir", events_dir,
     ]
@@ -155,7 +155,7 @@ def run_a_leg(full_dir: str, args) -> dict | None:
     with _LegWindow() as w:
         out = subprocess.run(
             leg_cmd(full_dir, args.events, args.epochs, args.mode,
-                    args.warmup, args.sha, args.sp * args.shards,
+                    args.warmup, args.sp * args.shards,
                     args.exec_cores),
             capture_output=True, text=True, cwd=REPO, timeout=3600,
             start_new_session=True)
@@ -180,7 +180,7 @@ def run_b_leg(meta: dict, args) -> dict | None:
             n_ev = meta["counts"].get(str(s), meta["counts"].get(s))
             procs.append(subprocess.Popen(
                 leg_cmd(sdirs[s], n_ev, args.epochs, args.mode, args.warmup,
-                        args.sha, args.sp, args.exec_cores),
+                        args.sp, args.exec_cores),
                 stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True,
                 cwd=REPO, start_new_session=True))
         shard_results = []
@@ -241,7 +241,6 @@ def main() -> None:
     ap.add_argument("--epochs", type=int, default=4)
     ap.add_argument("--mode", default="mor")
     ap.add_argument("--warmup", type=int, default=2)
-    ap.add_argument("--sha", default="jvm")
     ap.add_argument("--shards", type=int, default=4)
     ap.add_argument("--sp", type=int, default=32,
                     help="shuffle partitions PER EXECUTOR shard (same "
@@ -329,7 +328,7 @@ def main() -> None:
 
     full_dir = ensure_event_log(args.keys, args.events, args.epochs)
     sig = (f"sharded{args.shards}_k{args.keys}_e{args.events}_p{args.epochs}"
-           f"_{args.mode}_{args.sha}_sp{args.sp}"
+           f"_{args.mode}_sp{args.sp}"
            + (f"_c{args.exec_cores}" if args.exec_cores != 4 else ""))
     phase_path = os.path.join(REPO, "BENCH", "host_phase.jsonl")
     hist_path = os.path.join(REPO, "BENCH", "sharded_history.jsonl")

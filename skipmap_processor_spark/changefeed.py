@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 from skipmap_processor_spark.lake import (KEY_COLS, _REPO_PRUNE_CAP,
                                            _prune_by_members,
                                            _prune_by_stats, LakeTable,
-                                           bucket_expr)
+                                           bucket_expr, lww_fold)
 
 # commit kinds that can add/remove live rows; manifests written before
 # commit-kind tagging carry no marker and are treated as merges (safe:
@@ -162,22 +162,6 @@ def _added_entries(lake: LakeTable, from_version: int,
             emitted.add(fe["path"])
             uniq.append(fe)
     return uniq
-
-
-def _lww_fold(df: DataFrame) -> DataFrame:
-    """One LWW-winning row per key (tombstones included). Associative:
-    fold(fold(A) ∪ B) == fold(A ∪ B) — the post image exploits this."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*KEY_COLS).orderBy(
-        F.col("commit").desc(), F.col("event_seq").desc(),
-        F.col("_epoch").desc(),
-    )
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
 
 
 def table_changes(lake: LakeTable, from_version: int,
@@ -317,7 +301,7 @@ def table_changes(lake: LakeTable, from_version: int,
         # window drop out of the plan (measured cold at the 1000-commit
         # catch-up: 7.1 s -> 4.1 s, all of it first-use codegen of the
         # operators removed).
-        post = _lww_fold(cand_df)
+        post = lww_fold(cand_df)
         feed = post.filter(~F.col("is_deleted")).select(
             *KEY_COLS, *payload, "commit", "event_seq",
             F.lit("insert").alias("_change_type"))
@@ -330,8 +314,8 @@ def table_changes(lake: LakeTable, from_version: int,
         .join(keys, KEY_COLS, "inner")
         .localCheckpoint(eager=True)
     )
-    pre = _lww_fold(base)
-    post = _lww_fold(base.unionByName(cand_df))
+    pre = lww_fold(base)
+    post = lww_fold(base.unionByName(cand_df))
 
     p = pre.select(
         *KEY_COLS,

@@ -28,29 +28,35 @@ upserts, /root/reference/src/io/PostGISDataStore.ts:829-850):
 - **Tombstones**: deletes keep ``(key, ord, is_deleted=true)`` rows so stale
   duplicate deliveries can never resurrect a deleted/renamed-away row.
 
-Concurrency: optimistic multi-writer. A commit atomically claims the next
-manifest version via exclusive file creation (``O_CREAT|O_EXCL`` — the CAS);
-a loser gets ``CommitConflict``, reloads the latest manifest, rebases its
-file-list changes, and retries with jittered backoff — Iceberg's commit
+Concurrency: optimistic multi-writer, one protocol for every commit. A
+commit writes its manifest under a temp name and atomically claims the next
+version by hard-linking it to ``v{N}.json`` (fails if the name exists — the
+CAS); a loser gets ``CommitConflict``, reloads the latest manifest, rebases
+its file-list changes, and retries with jittered backoff — Iceberg's commit
 protocol on a filesystem catalog (reference precedent: deadlock retry with
 backoff, /root/reference/src/clustering/database/PostgreSQLClusteringDatabase.ts:136-172).
-On object stores without atomic create-if-absent you swap this for a real
-catalog (Hive/Nessie/REST) CAS; the rebase logic is identical.
+A data commit that replaces files (CoW merge, compaction) rebases only while
+every file it replaces is still live; otherwise it re-runs from the winner's
+manifest (``_commit_staged``). On object stores without atomic
+create-if-absent you swap this for a real catalog (Hive/Nessie/REST) CAS;
+the rebase logic is identical.
 """
 
 from __future__ import annotations
 
 import base64
+import contextlib
 import fcntl
 import hashlib
 import json
 import os
 import random
+import shutil
 import time
 import uuid
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -75,6 +81,53 @@ class CommitConflict(Exception):
 def bucket_expr(num_buckets: int):
     """Deterministic bucket id for a key — same function on write and read."""
     return F.pmod(F.xxhash64(F.col("repo"), F.col("path")), F.lit(num_buckets))
+
+
+def lww_fold(df: DataFrame, num_buckets: int | None = None,
+             salts: int = 1, partitions: int | None = None) -> DataFrame:
+    """Keep each (repo, path) key's last-writer-wins row. This is the one
+    place the engine states its version order: ``commit`` desc, then
+    ``event_seq`` desc, then — when the frame carries ``_epoch`` — the later
+    stamp, with an unstamped (null) row losing every tie. Equal-ord rows are
+    verbatim redeliveries, so the tie-break only decides which ``_epoch``
+    survives: a stored row keeps its stamp against an incoming duplicate.
+
+    Two physical forms, same winners:
+
+    - ``num_buckets=None``: a window over the key — the read-side fold,
+      whose output feeds no write.
+    - ``num_buckets=nb``: the write-side single-exchange form. Rows get
+      ``_bucket = bucket_expr(nb)`` and are hash-partitioned by
+      ``(_bucket, xxhash64(path) % salts)``, sorted by (key, order) inside
+      each partition, and each key's first row is kept via ``lag``. The salt
+      hashes the path, so all rows of a key share it (key-complete) while a
+      hot repo's paths spread over ``salts`` tasks per bucket. The output
+      keeps ``_bucket`` and arrives bucket-contiguous, so the
+      bucket-partitioned writer adds no sort and writes up to ``salts``
+      files per bucket. ``partitions`` fixes the exchange width (AQE does
+      not coalesce a sized repartition, so each bucket really gets its
+      ``salts`` tasks); None lets AQE size it.
+    """
+    order = [F.col("commit").desc(), F.col("event_seq").desc()]
+    if "_epoch" in df.columns:
+        order.append(F.col("_epoch").desc_nulls_last())
+    if num_buckets is None:
+        w = Window.partitionBy(*KEY_COLS).orderBy(*order)
+        return (df.withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") == 1).drop("_rn"))
+    df = df.withColumn("_bucket", bucket_expr(num_buckets))
+    parts = ["_bucket"]
+    if salts > 1:
+        df = df.withColumn(
+            "_salt", F.pmod(F.xxhash64(F.col("path")), F.lit(salts)))
+        parts.append("_salt")
+    if partitions:
+        df = df.repartition(partitions, *parts)
+    w = Window.partitionBy(*parts).orderBy(*KEY_COLS, *order)
+    same_key = (F.lag("repo").over(w).eqNullSafe(F.col("repo"))
+                & F.lag("path").over(w).eqNullSafe(F.col("path")))
+    return (df.withColumn("_same", same_key).filter(~F.col("_same"))
+            .drop("_same", "_salt"))
 
 
 def _spec_prune(file_nb: int, req_nb: int, bset: set[int]) -> set[int] | None:
@@ -267,9 +320,9 @@ class LakeTable:
     ) -> "LakeTable":
         """``merge_mode``:
 
-        - ``cow`` (copy-on-write): MERGE joins the batch against affected
-          buckets and rewrites them — read-optimal, write cost proportional
-          to touched-bucket size.
+        - ``cow`` (copy-on-write): MERGE folds the batch into the affected
+          buckets' files and rewrites them — read-optimal, write cost
+          proportional to touched-bucket size.
         - ``mor`` (merge-on-read): MERGE appends one delta file per affected
           bucket (no read, no join — write cost proportional to batch size
           only); readers apply a LWW window; ``compact()`` folds deltas.
@@ -363,8 +416,12 @@ class LakeTable:
             return json.load(f)
 
     def _commit_manifest(self, manifest: dict) -> None:
-        """Atomically claim manifest version N (CAS via O_CREAT|O_EXCL) and
-        advance the _VERSION pointer monotonically. Raises CommitConflict if
+        """Atomically claim manifest version N and advance the _VERSION
+        pointer monotonically. The manifest is written and fsynced under a
+        temp name, then claimed by ``os.link`` to ``v{N}.json`` — the CAS,
+        which fails if the name exists. A crash mid-write therefore leaves
+        only a temp file (``vacuum`` removes it), never a torn ``v{N}.json``
+        that ``_latest_version`` would trust. Raises CommitConflict if
         another writer claimed N first — the caller rebases and retries."""
         v = int(manifest["version"])
         # wall-clock commit stamp (Iceberg snapshot timestamp-ms analog):
@@ -372,15 +429,21 @@ class LakeTable:
         # Re-stamped on every CAS attempt so the persisted value is the
         # moment the winning write actually happened.
         manifest["committed_unix"] = round(time.time(), 3)
-        mpath = os.path.join(self.path, "manifests", f"v{v}.json")
+        mdir = os.path.join(self.path, "manifests")
+        tmp = os.path.join(mdir, f"tmp-v{v}-{uuid.uuid4().hex}.json")
         try:
-            fd = os.open(mpath, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
-        except FileExistsError:
-            raise CommitConflict(f"manifest v{v} already committed") from None
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
-            f.flush()
-            os.fsync(f.fileno())
+            with open(tmp, "w") as f:
+                json.dump(manifest, f)
+                f.flush()
+                os.fsync(f.fileno())
+            try:
+                os.link(tmp, os.path.join(mdir, f"v{v}.json"))
+            except FileExistsError:
+                raise CommitConflict(
+                    f"manifest v{v} already committed") from None
+        finally:
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(tmp)
         # pointer advance under a short flock so a slow loser can't regress
         # the pointer below a newer winner's version
         lock = os.path.join(self.path, "_VERSION.lock")
@@ -428,12 +491,18 @@ class LakeTable:
         ``kind`` defaults to ``metadata`` (DDL / bookkeeping commits never
         add or remove data rows — the change feed skips these versions
         during candidate-file discovery); callers whose mutate DOES land
-        data (WAP publish) pass ``merge`` so downstream feeds see it."""
+        data (``_commit_staged``, WAP publish) pass their kind so
+        downstream feeds see it.
+
+        The claimed version is the loaded one + 1: a racer committing
+        between the load and the claim makes the claim conflict, so a
+        commit is never based on a stale manifest."""
         for attempt in range(max_retries):
-            mani = self.manifest(self._latest_version())
+            latest = self._latest_version()
+            mani = self.manifest(latest)
             if not mutate(mani):
                 return mani
-            mani["version"] = self._latest_version() + 1
+            mani["version"] = latest + 1
             mani["commit_kind"] = kind
             try:
                 self._commit_manifest(mani)
@@ -566,31 +635,30 @@ class LakeTable:
 
     @staticmethod
     def _has_multi(mani: dict) -> bool:
-        """True if any bucket holds >1 file (MOR deltas present) — computed
-        from descriptors, no shard loads. Buckets are counted per SPEC
-        ((nb, bucket)), and a table holding files from two specs is always
-        multi: a key's old-spec row and new-spec delta live in different
-        bucket numbers, so per-number counts alone would miss the overlap
-        and the read path would skip the LWW fold it needs."""
+        """True if two live files may hold rows of the same key, so reads
+        need the LWW fold (MOR deltas, or a commit that rebased next to a
+        racer) — computed from descriptors, no shard loads. Two files can
+        share a key iff their buckets overlap once both are expressed in the
+        finest live spec: specs form a divisibility chain (rescale_buckets),
+        so a file in bucket b of spec nb covers fine buckets b, b + nb, ...
+        This is exact across a rescale: an old-spec row and a new-spec delta
+        of one key overlap, while a bucket that a CoW merge or compaction
+        migrated whole does not."""
         cur_nb = int(mani["num_buckets"])
-        specs: set[int] = set()
-        counts: dict[tuple[int, int], int] = {}
-        for fe in mani.get("files", []):
-            k = (int(fe.get("nb", cur_nb)), int(fe["bucket"]))
-            specs.add(k[0])
-            counts[k] = counts.get(k, 0) + 1
-            if counts[k] > 1 or len(specs) > 1:
-                return True
-        for sd in mani.get("shards", []):
-            sd_nb = int(sd.get("nb", cur_nb))
-            specs.add(sd_nb)
-            if len(specs) > 1:
-                return True
-            for b, c in sd["bucket_counts"].items():
-                k = (sd_nb, int(b))
-                counts[k] = counts.get(k, 0) + int(c)
-                if counts[k] > 1:
+        groups = [(int(fe.get("nb", cur_nb)), {fe["bucket"]: 1})
+                  for fe in mani.get("files", [])]
+        groups += [(int(sd.get("nb", cur_nb)), sd["bucket_counts"])
+                   for sd in mani.get("shards", [])]
+        fine = max([nb for nb, _ in groups], default=cur_nb)
+        seen: set[int] = set()
+        for nb, counts in groups:
+            for b, c in counts.items():
+                if int(c) > 1:
                     return True
+                for f in range(int(b), fine, nb):
+                    if f in seen:
+                        return True
+                    seen.add(f)
         return False
 
     @property
@@ -1014,23 +1082,7 @@ class LakeTable:
                 if len(files) > 128:
                     fold_files, plain_files = files, []
             if fold_files:
-                # _epoch desc tie-break: verbatim duplicate deliveries
-                # landed in two epochs are identical rows — pick is
-                # value-irrelevant but made deterministic for
-                # engine-column reads.
-                from pyspark.sql import Window
-
-                w = Window.partitionBy(*KEY_COLS).orderBy(
-                    F.col("commit").desc(),
-                    F.col("event_seq").desc(),
-                    F.col("_epoch").desc(),
-                )
-                df = (
-                    _scoped(fold_files)
-                    .withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") == 1)
-                    .drop("_rn")
-                )
+                df = lww_fold(_scoped(fold_files))
                 if plain_files:
                     df = df.unionByName(_scoped(plain_files))
             else:
@@ -1118,18 +1170,7 @@ class LakeTable:
         files, _ = self.files_since(commit_floor, mani)
         df = self._read_files(mani, files)
         if mani["properties"].get("has_deltas"):
-            from pyspark.sql import Window
-
-            w = Window.partitionBy(*KEY_COLS).orderBy(
-                F.col("commit").desc(),
-                F.col("event_seq").desc(),
-                F.col("_epoch").desc(),
-            )
-            df = (
-                df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
+            df = lww_fold(df)
         df = df.filter(F.col("commit") > F.lit(commit_floor))
         if not include_deleted:
             df = df.filter(~F.col("is_deleted"))
@@ -1317,7 +1358,7 @@ class LakeTable:
                     pre_partitioned: bool = False,
                     pre_commit_check=None,
                     post_commit_mutate=None) -> dict:
-        """Copy-on-write MERGE of a deduped action batch, gated by epoch HWM.
+        """MERGE of a deduped action batch, gated by epoch HWM.
 
         ``actions`` columns: repo, path, commit, event_seq,
         op ('upsert'|'delete'), plus current payload columns (missing ones
@@ -1328,249 +1369,193 @@ class LakeTable:
           - target ord >= action ord -> keep target (stale duplicate)
           - action newer + upsert    -> replace row
           - action newer + delete    -> tombstone with the delete's ord
+
+        ``mor`` tables append the batch as delta files (readers and
+        ``compact`` fold them); ``cow`` tables fold at write time
+        (``_merge_cow``). Both commit through ``_commit_staged``.
+        ``affected_buckets`` (CoW) are the batch's bucket ids under the
+        current spec when known (the pipeline's one-pass profile); otherwise
+        they are probed from the batch.
         """
         mani = self.manifest()
         if epoch is not None and self._epoch_applied(mani, epoch):
             return {"skipped": True, "epoch": epoch,
                     "hwm_epoch": int(mani["properties"]["hwm_epoch"])}
-
-        nb = int(mani["num_buckets"])
-        payload = self.payload_columns(mani)
-        pay_types = {
-            c["name"]: c["type"]
-            for c in self.current_schema(mani)
-        }
-        for col in payload:
-            if col not in actions.columns:
-                actions = actions.withColumn(col, F.lit(None).cast(pay_types[col]))
-
         if mani["properties"].get("merge_mode") == "mor":
-            return self._merge_mor(actions, epoch, mani, files_per_bucket,
-                                   pre_partitioned, pre_commit_check,
-                                   post_commit_mutate)
+            stats = self._merge_mor(actions, epoch, mani, files_per_bucket,
+                                    pre_partitioned, pre_commit_check,
+                                    post_commit_mutate)
+        else:
+            stats = self._merge_cow(actions, epoch, mani, files_per_bucket,
+                                    affected_buckets, post_commit_mutate)
+        if stats.get("skipped") or stats.get("aborted"):
+            return stats
+        t0 = time.monotonic()
+        self._append_ledger(stats)
+        stats["t_ledger"] = round(time.monotonic() - t0, 3)
+        return stats
 
-        # CoW rewrites of the SAME bucket don't commute (a concurrent
-        # rewrite would be silently lost), but DISJOINT-bucket rewrites do:
-        # each writer replaces only its own buckets' files and the manifest
-        # CAS rebases the union. So CoW writers claim per-bucket locks (in
-        # sorted order — deadlock-free) instead of one global writer lock;
-        # merges over disjoint bucket sets commit concurrently (VERDICT r3
-        # item 5). MOR appends stay on the plain optimistic CAS path (they
-        # always commute). Reference precedent for concurrent writers:
-        # /root/reference/src/clustering/database/
-        # PostgreSQLClusteringDatabase.ts:46-55,136-172 (pool of 10 +
-        # deadlock retry).
-        # Bucket discovery runs BEFORE locking: it only reads the batch.
-        # The caller's fused one-pass profile (affected_buckets) saves the
-        # probe job; otherwise probe, caching the batch so the Arrow
-        # normalize+sha stage doesn't run twice. nb is NOT create-time-fixed
-        # (rescale_buckets): the manifest is reloaded under the locks and a
-        # spec change restarts discovery in the new space.
-        base_affected = (sorted(int(b) for b in affected_buckets)
-                         if affected_buckets is not None else None)
-        persisted_df = None
-        probed: list[int] | None = None
-        try:
-            for _restart in range(8):
-                act = actions.withColumn("_bucket", bucket_expr(nb))
-                if base_affected is not None:
-                    affected = base_affected
-                elif probed is not None:
-                    # re-express the old-space probe in the new space: the
-                    # preimage is a superset of the batch's true new-space
-                    # bucket set — extra locks/reads, never a miss
-                    affected = probed
-                else:
-                    act = persisted_df = act.persist()
-                    probed = sorted(
-                        r["_bucket"]
-                        for r in act.select("_bucket").distinct().collect())
-                    affected = probed
-                # Closure under legacy specs: a coarse file touched by any
-                # affected bucket spans several current buckets — all of
-                # them must be locked, read, and rewritten together or a
-                # concurrent writer on a sibling bucket would race the same
-                # file. Closing w.r.t. the COARSEST live spec covers every
-                # finer spec too (divisibility chain).
-                specs = self._live_specs(self.manifest(self._latest_version()))
-                s_min = min(specs | {nb})
-                if s_min != nb:
-                    img = {b % s_min for b in affected}
-                    affected = [b for b in range(nb) if b % s_min in img]
-                affected = sorted(set(affected))
-                lock_dir = os.path.join(self.path, "_locks")
-                os.makedirs(lock_dir, exist_ok=True)
-                fds: list[int] = []
-                try:
-                    for b in affected:
-                        fd = os.open(os.path.join(lock_dir, f"b{b}.lock"),
-                                     os.O_CREAT | os.O_RDWR, 0o644)
-                        fcntl.flock(fd, fcntl.LOCK_EX)
-                        fds.append(fd)
-                    # reload under the locks: a writer sharing any bucket may
-                    # have committed (and applied this very epoch) while we
-                    # waited — and rescale_buckets may have changed the spec
-                    # (it holds ALL bucket locks to commit, so seeing the old
-                    # nb here means it cannot commit until we release)
-                    mani = self.manifest(self._latest_version())
-                    if int(mani["num_buckets"]) != nb:
-                        new_nb = int(mani["num_buckets"])
-                        if base_affected is not None:
-                            base_affected = sorted(
-                                _spec_prune(new_nb, nb, set(base_affected)))
-                        if probed is not None:
-                            probed = sorted(
-                                _spec_prune(new_nb, nb, set(probed)))
-                        nb = new_nb
-                        continue
-                    if epoch is not None and self._epoch_applied(mani, epoch):
-                        return {"skipped": True, "epoch": epoch,
-                                "hwm_epoch": int(
-                                    mani["properties"]["hwm_epoch"])}
-                    payload = self.payload_columns(mani)
-                    pay_types = {c["name"]: c["type"]
-                                 for c in self.current_schema(mani)}
-                    for col in payload:
-                        if col not in act.columns:
-                            act = act.withColumn(
-                                col, F.lit(None).cast(pay_types[col]))
-                    return self._merge_cow_locked(
-                        act, epoch, mani, files_per_bucket, affected,
-                        post_commit_mutate)
-                finally:
-                    for fd in fds:
-                        fcntl.flock(fd, fcntl.LOCK_UN)
-                        os.close(fd)
-            raise CommitConflict(
-                "CoW merge: bucket spec kept changing under us (8 restarts)")
-        finally:
-            if persisted_df is not None:
-                persisted_df.unpersist()
-
-    def _merge_cow_locked(self, act: DataFrame, epoch: int | None,
-                          mani: dict, files_per_bucket: int,
-                          affected: list[int],
-                          post_commit_mutate=None) -> dict:
-        """``act`` arrives bucketed (_bucket column) with payload columns
-        filled against ``mani``; the caller holds exclusive locks on every
-        bucket in ``affected``."""
-        nb = int(mani["num_buckets"])
-        payload = self.payload_columns(mani)
+    def _action_rows(self, actions: DataFrame, mani: dict,
+                     stamp) -> DataFrame:
+        """Stored-row projection of an action batch under ``mani``'s schema:
+        deletes become tombstones with null payload, missing payload columns
+        are null-filled, and every payload column is cast to its declared
+        type (an incoming batch may carry a pre-widening narrow type; the
+        file's physical type must match its recorded schema version).
+        ``_epoch`` is ``stamp``; a ``_bucket`` column is carried through."""
         pay_types = {c["name"]: c["type"] for c in self.current_schema(mani)}
-
-        old = self.read(
-            buckets=affected, include_deleted=True, with_engine_cols=True
-        ).withColumn("_bucket", bucket_expr(nb))
-
-        s = act.select(
+        is_del = F.col("op") == F.lit("delete")
+        payload = []
+        for c in self.payload_columns(mani):
+            src = F.col(c) if c in actions.columns else F.lit(None)
+            payload.append(F.when(is_del, F.lit(None).cast(pay_types[c]))
+                           .otherwise(src.cast(pay_types[c])).alias(c))
+        return actions.select(
             *KEY_COLS,
-            F.col("_bucket"),
-            *[F.col(c).alias(f"_s_{c}") for c in ORD_COLS + ["op"] + payload],
-        )
-        t = old
-        j = t.join(s, KEY_COLS + ["_bucket"], "full_outer")
-
-        batch_wins = F.col("_s_commit").isNotNull() & (
-            F.col("commit").isNull()
-            | (F.col("_s_commit") > F.col("commit"))
-            | (
-                (F.col("_s_commit") == F.col("commit"))
-                & (F.col("_s_event_seq") > F.col("event_seq"))
-            )
-        )
-        is_del = F.col("_s_op") == F.lit("delete")
-        result = j.select(
-            *KEY_COLS,
-            F.when(batch_wins, F.col("_s_commit")).otherwise(F.col("commit")).alias("commit"),
-            F.when(batch_wins, F.col("_s_event_seq")).otherwise(F.col("event_seq")).alias("event_seq"),
-            F.when(batch_wins, is_del).otherwise(F.coalesce(F.col("is_deleted"), F.lit(False))).alias("is_deleted"),
-            F.when(batch_wins, F.lit(-1 if epoch is None else epoch))
-            .otherwise(F.col("_epoch"))
-            .alias("_epoch"),
-            *[
-                # source-side cast: incoming batches may carry a narrower
-                # pre-widening type; target side is already current-typed
-                # by _read_files' id-bound rebind
-                F.when(batch_wins & is_del, F.lit(None).cast(pay_types[c]))
-                .when(batch_wins, F.col(f"_s_{c}").cast(pay_types[c]))
-                .otherwise(F.col(c))
-                .alias(c)
-                for c in payload
-            ],
-            F.col("_bucket"),
+            F.col("commit"),
+            F.col("event_seq").cast("bigint").alias("event_seq"),
+            is_del.alias("is_deleted"),
+            stamp.cast("bigint").alias("_epoch"),
+            *payload,
+            *([F.col("_bucket")] if "_bucket" in actions.columns else []),
         )
 
-        # files_per_bucket tasks per affected bucket (raise at scale so a hot
-        # 25 GB bucket isn't one task); stable row order inside files
-        # (deterministic output, reference precedent: sorted cache keys,
-        # /root/reference/src/utils/PostgresCache.ts:340-344)
-        fpb = max(files_per_bucket, 1)
-        parts = [F.col("_bucket")]
-        if fpb > 1:
-            parts.append(F.pmod(F.xxhash64(F.col("path")), F.lit(fpb)))
-        result = result.repartition(
-            max(len(affected), 1) * fpb, *parts
-        ).sortWithinPartitions("_bucket", *KEY_COLS)
-        new_version = mani["version"] + 1
-        out_dir = os.path.join(self.path,
-                               f"data/v{new_version}-{uuid.uuid4().hex[:8]}")
-        self._data_writer(result, mani).parquet(out_dir)
+    def _merge_cow(self, actions: DataFrame, epoch: int | None, mani: dict,
+                   files_per_bucket: int,
+                   affected: list[int] | None,
+                   post_commit_mutate=None) -> dict:
+        """Copy-on-write: compaction's fold with the batch added. The
+        affected buckets' files are read, the batch rows are unioned in, the
+        whole is folded by ``lww_fold`` and written back as up to
+        ``files_per_bucket`` files per bucket, and the commit replaces
+        exactly the files read. Batch rows enter unstamped (null ``_epoch``)
+        so a stored row wins an equal-ord tie — a duplicate delivery does
+        not restamp ``_epoch`` — and take this epoch's stamp only when they
+        win. A lost commit race whose files are gone re-runs from the
+        winner's manifest."""
+        nb0 = int(mani["num_buckets"])
+        persisted = None
+        if affected is None:
+            # cache the batch so the probe and the fold don't both run its
+            # normalize+sha stage
+            actions = persisted = actions.persist()
+            affected = [r[0] for r in actions.select(bucket_expr(nb0))
+                        .distinct().collect()]
+        stamp = F.lit(-1 if epoch is None else epoch).cast("bigint")
+        try:
+            for _attempt in range(20):
+                nb = int(mani["num_buckets"])
+                # the batch's buckets in the current spec (rescale_buckets
+                # may have grown it since they were computed), closed under
+                # the coarsest live spec: a coarse file spans several
+                # current buckets, and all of them must be read and
+                # rewritten together or its other keys would be duplicated
+                bset = _spec_prune(nb, nb0, set(affected))
+                s_min = min(self._live_specs(mani) | {nb})
+                img = {b % s_min for b in bset}
+                buckets = [b for b in range(nb) if b % s_min in img]
+                files = self.file_entries(mani, buckets=buckets)
+                fpb = max(files_per_bucket, 1)
+                rows = lww_fold(
+                    self._read_files(mani, files).unionByName(
+                        self._action_rows(actions, mani, F.lit(None))),
+                    num_buckets=nb, salts=fpb,
+                    partitions=max(len(buckets), 1) * fpb,
+                ).withColumn("_epoch", F.coalesce(F.col("_epoch"), stamp))
+                stats = self._commit_staged(
+                    rows, mani, {fe["path"] for fe in files}, "merge",
+                    epoch=epoch, post_commit_mutate=post_commit_mutate)
+                if stats is not None:
+                    return stats
+                mani = self.manifest(self._latest_version())
+            raise CommitConflict("CoW merge: gave up after 20 re-runs")
+        finally:
+            if persisted is not None:
+                persisted.unpersist()
 
+    def _commit_staged(self, rows: DataFrame, mani: dict, replaces: set[str],
+                       kind: str, epoch: int | None = None,
+                       pre_commit_check=None,
+                       post_commit_mutate=None) -> dict | None:
+        """The one write-and-commit routine of merges and compaction.
+
+        Writes ``rows`` (bucket-contiguous, with a ``_bucket`` column) to a
+        fresh staging dir, records the files in one shard, and commits —
+        through ``_commit_with_rebase``, on the latest manifest — an edit
+        replacing the live files whose paths are in ``replaces`` with that
+        shard: data, epoch HWM and ``post_commit_mutate`` bookkeeping land
+        atomically, and ``has_deltas`` is recomputed.
+
+        The edit re-applies on whichever manifest is latest at each commit
+        attempt. If that manifest already applied this epoch (a racer), the
+        staged files are deleted and the commit reports skipped. If every
+        replaced file is still live it rebases (appends always do: they
+        replace nothing). Otherwise the staged files are deleted and None is
+        returned: the caller re-runs from the winner's manifest.
+        ``pre_commit_check`` runs after the write; False rolls the staging
+        back and returns ``{"aborted": True}``."""
+        # uuid-suffixed: two racing writers must never share a staging path
+        # (mode=overwrite would silently delete the loser's files before its
+        # manifest entry lands)
+        out_dir = os.path.join(
+            self.path, "data",
+            f"v{int(mani['version']) + 1}-{kind}-{uuid.uuid4().hex[:8]}")
+        t0 = time.monotonic()
+        self._data_writer(rows, mani).parquet(out_dir)
+        t1 = time.monotonic()
+        if pre_commit_check is not None and not pre_commit_check():
+            # optimistic execution invalidated (e.g. renames observed in a
+            # batch run through the rename-free fast path): the staged files
+            # are invisible without a manifest entry; the caller re-runs the
+            # general path
+            shutil.rmtree(out_dir, ignore_errors=True)
+            return {"aborted": True, "epoch": epoch}
         new_files = self._scan_written(out_dir, mani["schema_version"])
-        new_desc = self._write_shard(new_files, nb=nb)
-        affected_set = set(affected)
+        new_desc = self._write_shard(new_files, nb=int(mani["num_buckets"]))
+        t2 = time.monotonic()
+        lost: dict = {}
 
-        def _covered(fe: dict) -> bool:
-            # spec-aware: EXACTLY the read-set predicate file_entries used
-            # for `old` above, so every dropped file's rows were rewritten
-            # and every kept file has no rows in the affected set — no loss,
-            # no duplication, and legacy files touched by this merge are
-            # migrated to the current spec as a side effect.
-            need = _spec_prune(int(fe["nb"]), nb, affected_set)
-            if need is None:  # pragma: no cover - grow-only rule forbids it
-                raise AssertionError(
-                    f"incomparable bucket specs {fe['nb']} vs {nb}")
-            return int(fe["bucket"]) in need
-
-        # atomic: data + schema + HWM commit together. Holding this bucket
-        # set's locks, a conflicting commit is either metadata-only
-        # (add/rename/drop column) or a CoW merge over a DISJOINT bucket
-        # set — in both cases rebasing is recomputing the carry list on the
-        # winner's manifest (drop our buckets' files, append our shard) and
-        # retrying: the winner never touched our buckets.
-        for attempt in range(20):
-            self._rewrite_shards(mani, _covered)
-            mani["shards"] = mani["shards"] + [new_desc]
-            mani["version"] = new_version
+        def edit(m: dict) -> bool:
+            lost.clear()
+            if epoch is not None and self._epoch_applied(m, epoch):
+                lost["hwm_epoch"] = int(m["properties"]["hwm_epoch"])
+                return False
+            if replaces:
+                if not replaces <= {fe["path"] for fe in self.file_entries(m)}:
+                    lost["rerun"] = True
+                    return False
+                self._rewrite_shards(m, lambda fe: fe["path"] in replaces)
+            m["shards"] = m.get("shards", []) + [new_desc]
             if epoch is not None:
-                self._mark_epoch_applied(mani, epoch)
+                self._mark_epoch_applied(m, epoch)
             if post_commit_mutate is not None:
                 # runs on the (possibly rebased) manifest AFTER the epoch
                 # gate state is final — the parked-rename bookkeeping reads
                 # the post-apply gap intervals, atomically with the data
-                post_commit_mutate(mani)
-            mani["commit_kind"] = "merge"
-            try:
-                self._commit_manifest(mani)
-                break
-            except CommitConflict:
-                time.sleep(random.uniform(0.005, 0.03) * (attempt + 1))
-                mani = self.manifest(self._latest_version())
-                new_version = mani["version"] + 1
-        else:
-            raise CommitConflict("CoW commit: gave up after 20 retries")
+                post_commit_mutate(m)
+            m["properties"]["has_deltas"] = self._has_multi(m)
+            return True
 
-        stats = {
+        mani = self._commit_with_rebase(edit, kind=kind)
+        if lost:
+            shutil.rmtree(out_dir, ignore_errors=True)
+            if lost.get("rerun"):
+                return None
+            return {"skipped": True, "epoch": epoch,
+                    "hwm_epoch": lost["hwm_epoch"]}
+        return {
+            "t_write": round(t1 - t0, 3),
+            "t_scan": round(t2 - t1, 3),
+            "t_commit": round(time.monotonic() - t2, 3),
             "skipped": False,
             "epoch": -1 if epoch is None else epoch,
-            "version": new_version,
-            "affected_buckets": affected,
+            "version": int(mani["version"]),
+            "mode": mani["properties"].get("merge_mode"),
+            "affected_buckets": sorted({fe["bucket"] for fe in new_files}),
             "files_written": len(new_files),
             "rows_written": sum(fe["rows"] for fe in new_files),
             "per_bucket_rows": {fe["bucket"]: fe["rows"] for fe in new_files},
         }
-        self._append_ledger(stats)
-        return stats
 
     # ----------------------------------------------------- row-level DML
 
@@ -1646,28 +1631,11 @@ class LakeTable:
         """Merge-on-read: append the deduped batch as delta rows — no read of
         existing data, no join. Cost is proportional to the batch, never to
         the table. Readers resolve versions via the LWW window (read());
-        compact() folds deltas back to one row per key."""
+        compact() folds deltas back to one row per key. Appends replace no
+        files, so a lost commit race always rebases."""
         nb = int(mani["num_buckets"])
-        payload = self.payload_columns(mani)
-        pay_types = {c["name"]: c["type"] for c in self.current_schema(mani)}
-        is_del = F.col("op") == F.lit("delete")
-        rows = actions.select(
-            *KEY_COLS,
-            F.col("commit"),
-            F.col("event_seq").cast("bigint").alias("event_seq"),
-            is_del.alias("is_deleted"),
-            F.lit(-1 if epoch is None else epoch).cast("bigint").alias("_epoch"),
-            *[
-                # cast keeps the file's physical type identical to its
-                # recorded schema version even when the incoming batch
-                # carries a pre-widening narrow type (no-op otherwise)
-                F.when(is_del, F.lit(None).cast(pay_types[c]))
-                .otherwise(F.col(c).cast(pay_types[c]))
-                .alias(c)
-                for c in payload
-            ],
-            *([F.col("_bucket")] if pre_partitioned else []),
-        )
+        rows = self._action_rows(actions, mani,
+                                 F.lit(-1 if epoch is None else epoch))
         if not pre_partitioned:
             # the general path shuffles here; the fast path
             # (prepare_actions_fast) already bucket-partitioned upstream —
@@ -1687,79 +1655,9 @@ class LakeTable:
         # re-sorting here would add a full-width O(n log n) pass AND break
         # bucket contiguity, forcing FileFormatWriter to insert its own sort
         # (measured: two redundant sorts of content-heavy rows per epoch)
-
-        import time as _time
-
-        new_version = mani["version"] + 1
-        # staging dir is uuid-suffixed: two racing writers must never share a
-        # staging path (mode=overwrite would silently delete the loser's
-        # files before its manifest entry lands)
-        out_dir = os.path.join(self.path,
-                               f"data/v{new_version}-{uuid.uuid4().hex[:8]}")
-        _t0 = _time.monotonic()
-        self._data_writer(rows, mani).parquet(out_dir)
-        _t1 = _time.monotonic()
-
-        if pre_commit_check is not None and not pre_commit_check():
-            # optimistic execution invalidated (e.g. renames observed in a
-            # batch run through the rename-free fast path): nothing was
-            # committed — the staged files are invisible without a manifest
-            # entry; delete them and let the caller re-run the general path
-            import shutil as _shutil
-
-            _shutil.rmtree(out_dir, ignore_errors=True)
-            return {"aborted": True, "epoch": epoch}
-
-        new_files = self._scan_written(out_dir, mani["schema_version"])
-        new_desc = self._write_shard(new_files, nb=nb)
-        _t2 = _time.monotonic()
-        # optimistic CAS commit: delta appends commute, so a conflict rebases
-        # by re-appending our shard onto the winner's manifest and retrying
-        # (jittered backoff, Iceberg commit protocol). The epoch gate is
-        # re-checked on the rebased manifest — if a racing writer applied the
-        # same epoch, our staged files are rolled back and we report skipped.
-        for attempt in range(20):
-            mani["shards"] = mani.get("shards", []) + [new_desc]
-            mani["version"] = new_version
-            if epoch is not None:
-                self._mark_epoch_applied(mani, epoch)
-            if post_commit_mutate is not None:
-                post_commit_mutate(mani)
-            mani["properties"]["has_deltas"] = self._has_multi(mani)
-            mani["commit_kind"] = "merge"
-            try:
-                self._commit_manifest(mani)
-                break
-            except CommitConflict:
-                time.sleep(random.uniform(0.005, 0.03) * (attempt + 1))
-                mani = self.manifest(self._latest_version())
-                if epoch is not None and self._epoch_applied(mani, epoch):
-                    import shutil as _shutil
-
-                    _shutil.rmtree(out_dir, ignore_errors=True)
-                    return {"skipped": True, "epoch": epoch,
-                            "hwm_epoch": int(mani["properties"]["hwm_epoch"])}
-                new_version = mani["version"] + 1
-        else:
-            raise CommitConflict("MOR commit: gave up after 20 retries")
-        _t3 = _time.monotonic()
-
-        stats = {
-            "t_write": round(_t1 - _t0, 3),
-            "t_scan": round(_t2 - _t1, 3),
-            "t_commit": round(_t3 - _t2, 3),
-            "skipped": False,
-            "epoch": -1 if epoch is None else epoch,
-            "version": new_version,
-            "mode": "mor",
-            "affected_buckets": sorted({fe["bucket"] for fe in new_files}),
-            "files_written": len(new_files),
-            "rows_written": sum(fe["rows"] for fe in new_files),
-            "per_bucket_rows": {fe["bucket"]: fe["rows"] for fe in new_files},
-        }
-        self._append_ledger(stats)
-        stats["t_ledger"] = round(_time.monotonic() - _t3, 3)
-        return stats
+        return self._commit_staged(rows, mani, set(), "merge", epoch=epoch,
+                                   pre_commit_check=pre_commit_check,
+                                   post_commit_mutate=post_commit_mutate)
 
     def _data_writer(self, df: DataFrame, mani: dict):
         """Bucket-partitioned parquet writer with the table's per-file row
@@ -1937,6 +1835,8 @@ class LakeTable:
         - every live file's bucket spec divides the current spec (the
           grow-only rescale invariant cross-spec pruning depends on);
         - every ref (tag) resolves to a retained manifest;
+        - every retained ``v*.json`` manifest parses (a torn manifest would
+          fail every later commit that reads it);
         - with ``check_footers=True``: parquet footers are re-read (one
           footer per file, parallel) and row counts compared to the entries.
 
@@ -2018,6 +1918,15 @@ class LakeTable:
                         errors.append(
                             f"row-count mismatch {fe['path']}: manifest "
                             f"{fe['rows']} vs footer {n}")
+
+        mdir = os.path.join(self.path, "manifests")
+        for fn in sorted(os.listdir(mdir)):
+            if fn.startswith("v") and fn.endswith(".json"):
+                try:
+                    with open(os.path.join(mdir, fn)) as f:
+                        json.load(f)
+                except (OSError, ValueError) as e:
+                    errors.append(f"unreadable manifest {fn}: {e}")
 
         n_refs = 0
         for name, ref in self.refs().items():
@@ -2351,14 +2260,14 @@ class LakeTable:
         folds old-spec files into the current spec (and CoW merges migrate
         the files they touch as a side effect) — no stop-the-world rewrite.
 
-        Concurrency: commits while holding every current-space bucket lock,
-        so no CoW rewrite is in flight across the spec flip (CoW writers
-        reload under their locks and restart on a spec change); MOR appends
-        need no coordination — their shards are stamped with the spec they
-        bucketed under, whichever side of the flip they land. One caveat for
-        external pre-partitioned fast-path writers (streaming pipeline):
-        quiesce them across the flip or let their batch fall back to the
-        general path.
+        Concurrency: a metadata commit through the optimistic rebase loop;
+        data writers need no coordination. A merge or compaction staged
+        under the old spec stamps its shard with that spec, whichever side
+        of the flip it commits on (its replaced files are still live, so it
+        rebases), and ``_has_multi`` sees any key overlap across specs. One
+        caveat for external pre-partitioned fast-path writers (streaming
+        pipeline): quiesce them across the flip or let their batch fall
+        back to the general path.
 
         Shrink is intentionally unsupported: growth keeps all live specs on
         one divisibility chain, which is what makes cross-spec pruning exact.
@@ -2372,49 +2281,28 @@ class LakeTable:
             raise ValueError(
                 f"rescale must grow by an integer factor: {cur} -> {new_nb}")
 
-        lock_dir = os.path.join(self.path, "_locks")
-        os.makedirs(lock_dir, exist_ok=True)
-        fds: list[int] = []
-        try:
-            for b in range(cur):
-                fd = os.open(os.path.join(lock_dir, f"b{b}.lock"),
-                             os.O_CREAT | os.O_RDWR, 0o644)
-                fcntl.flock(fd, fcntl.LOCK_EX)
-                fds.append(fd)
+        def mutate(mani: dict) -> bool:
+            old = int(mani["num_buckets"])
+            if old == int(new_nb):
+                return False
+            if new_nb % old != 0:
+                raise ValueError(
+                    f"rescale must grow by an integer factor: "
+                    f"{old} -> {new_nb}")
+            # stamp every live descriptor/entry that predates spec
+            # tracking: from here on, "no nb" would be ambiguous
+            for fe in mani.get("files", []):
+                fe.setdefault("nb", old)
+            for sd in mani.get("shards", []):
+                sd.setdefault("nb", old)
+            mani["num_buckets"] = int(new_nb)
+            hist = mani["properties"].setdefault("bucket_spec_history", [])
+            hist.append({"nb": old, "until_version": mani["version"]})
+            return True
 
-            def mutate(mani: dict) -> bool:
-                old = int(mani["num_buckets"])
-                if old == int(new_nb):
-                    return False
-                if new_nb % old != 0:  # pragma: no cover - serialized above
-                    raise ValueError(
-                        f"rescale must grow by an integer factor: "
-                        f"{old} -> {new_nb}")
-                # stamp every live descriptor/entry that predates spec
-                # tracking: from here on, "no nb" would be ambiguous
-                for fe in mani.get("files", []):
-                    fe.setdefault("nb", old)
-                for sd in mani.get("shards", []):
-                    sd.setdefault("nb", old)
-                mani["num_buckets"] = int(new_nb)
-                hist = mani["properties"].setdefault("bucket_spec_history", [])
-                hist.append({"nb": old, "until_version": mani["version"]})
-                # MOR mixed specs ⇒ a key's old-spec row and new-spec delta
-                # sit in two bucket numbers; readers must LWW-fold until
-                # compact() migrates. CoW is exempt: its merges rewrite the
-                # whole spec-closure, so a key never has two live rows.
-                if (mani["properties"].get("merge_mode") == "mor"
-                        and self._live_specs(mani) - {int(new_nb)}):
-                    mani["properties"]["has_deltas"] = True
-                return True
-
-            mani = self._commit_with_rebase(mutate)
-            return {"rescaled": True, "num_buckets": int(new_nb),
-                    "version": int(mani["version"])}
-        finally:
-            for fd in fds:
-                fcntl.flock(fd, fcntl.LOCK_UN)
-                os.close(fd)
+        mani = self._commit_with_rebase(mutate)
+        return {"rescaled": True, "num_buckets": int(new_nb),
+                "version": int(mani["version"])}
 
     def compaction_plan(self, max_delta_depth: int = 4,
                         min_small_file_bytes: int = 32 << 20,
@@ -2489,19 +2377,70 @@ class LakeTable:
         regardless, so only a brand-new epoch carrying an ancient stale
         duplicate could resurrect a GC'd delete.
 
-        Commits via optimistic CAS keyed on the exact file set folded:
-        a concurrent MOR delta append rebase-retries cleanly (its new files
-        are carried, has_deltas recomputed)."""
-        mani = self.manifest()
-        base_version = mani["version"]
+        Commits through ``_commit_staged``, replacing exactly the files
+        folded: a concurrent MOR delta append rebases cleanly (its new files
+        are carried, has_deltas recomputed), while a racer that rewrote a
+        folded file (another compaction, a CoW merge) makes this round
+        re-plan from the winner's manifest — a bucket is never folded
+        twice."""
+        folded = self.fold_ledger()
+        for _attempt in range(20):
+            mani = self.manifest(self._latest_version())
+            todo = self._compaction_todo(mani, target_files_per_bucket,
+                                         retention_epochs is not None,
+                                         buckets)
+            if not todo:
+                return {"compacted_buckets": 0, "ledger_files_folded": folded}
+            # Fused single-exchange fold (the ingest fast path's form): the
+            # naive read()+rewrite costs TWO exchanges and TWO sorts — the
+            # read window shuffles+sorts by key to pick LWW winners, then
+            # the write repartitions+sorts by bucket. lww_fold's bucket form
+            # does both in one exchange, in the layout the writer needs.
+            fold_files = [fe for fs in todo.values() for fe in fs]
+            df = lww_fold(self._read_files(mani, fold_files),
+                          num_buckets=int(mani["num_buckets"]))
+            horizon = None
+            if retention_epochs is not None:
+                # AFTER winner selection: pre-filtering would let an older
+                # non-tombstone row win under a GC'd tombstone (resurrection)
+                horizon = int(mani["properties"]["hwm_epoch"]) - int(
+                    retention_epochs)
+                # A never-applied epoch below the HWM may still arrive
+                # carrying an old upsert for a key whose newer tombstone
+                # we'd GC here — the epoch gate only blocks *applied*
+                # epochs, so the deleted row would be resurrected. Cap the
+                # horizon below the oldest outstanding epoch until the gap
+                # closes (ADVICE r2).
+                ivs = self._missing_intervals_of(mani["properties"])
+                if ivs:
+                    horizon = min(horizon, ivs[0][0] - 1)
+                df = df.filter(~(F.col("is_deleted")
+                                 & (F.col("_epoch") <= F.lit(horizon))))
+            # commit kind "compact": a logical no-op for the LIVE-rows view
+            # (LWW fold + tombstone GC never changes a non-deleted key's
+            # winning row) — the change feed skips this version's files
+            # during candidate discovery
+            stats = self._commit_staged(
+                df, mani, {fe["path"] for fe in fold_files}, "compact")
+            if stats is not None:
+                return {"compacted_buckets": len(todo),
+                        "version": stats["version"],
+                        "retention_horizon": horizon,
+                        "ledger_files_folded": folded}
+        raise CommitConflict("compact: gave up after 20 re-runs")
+
+    def _compaction_todo(self, mani: dict, target_files_per_bucket: int,
+                         every_bucket: bool,
+                         buckets: list[int] | None) -> dict:
+        """``compact``'s plan: the live files to fold, grouped by
+        ``(nb, bucket)``."""
         nb_cur = int(mani["num_buckets"])
-        hwm = int(mani["properties"]["hwm_epoch"])
         # bucket ids only collide within a spec — key groups by (nb, bucket)
         by_bucket: dict[tuple[int, int], list[dict]] = {}
         for fe in self.file_entries(mani):
             by_bucket.setdefault(
                 (int(fe["nb"]), int(fe["bucket"])), []).append(fe)
-        if retention_epochs is not None:
+        if every_bucket:
             # retention pass rewrites every non-empty bucket: old tombstones
             # may hide in single-file buckets the file-count rule would skip
             todo = dict(by_bucket)
@@ -2526,80 +2465,7 @@ class LakeTable:
         for k, fs in by_bucket.items():
             if k not in todo and k[0] == nb_cur and k[1] in cover:
                 todo[k] = fs
-        folded = self.fold_ledger()
-        if not todo:
-            return {"compacted_buckets": 0, "ledger_files_folded": folded}
-        folded_paths = {fe["path"] for fs in todo.values() for fe in fs}
-        nb = int(mani["num_buckets"])
-        # Fused single-exchange fold (same trick as the ingest fast path):
-        # the naive read()+rewrite costs TWO exchanges and TWO sorts — the
-        # MOR read window shuffles+sorts by key to pick LWW winners, then
-        # the write repartitions+sorts by bucket. Here the ONLY exchange is
-        # the bucket-partitioned window whose sort (_bucket, key, ord desc)
-        # both marks each key's first (= winning) row via lag and leaves the
-        # data in exactly the layout the dynamic-partition writer needs, so
-        # its own sort is elided. Files are pinned to base_version so the
-        # fold set matches folded_paths exactly.
-        from pyspark.sql import Window
-
-        fold_files = [fe for fs in todo.values() for fe in fs]
-        df = self._read_files(mani, fold_files).withColumn(
-            "_bucket", bucket_expr(nb)
-        )
-        w = Window.partitionBy("_bucket").orderBy(
-            F.col("repo").asc(), F.col("path").asc(),
-            F.col("commit").desc(), F.col("event_seq").desc(),
-            F.col("_epoch").desc(),
-        )
-        key = F.concat_ws("\x00", *KEY_COLS)
-        prev = F.lag(key).over(w)
-        df = (
-            df.withColumn("_is_first", prev.isNull() | (prev != key))
-            .filter(F.col("_is_first"))
-            .drop("_is_first")
-        )
-        horizon = None
-        if retention_epochs is not None:
-            # AFTER winner selection: pre-filtering would let an older
-            # non-tombstone row win under a GC'd tombstone (resurrection)
-            horizon = hwm - int(retention_epochs)
-            # A never-applied epoch below the HWM may still arrive carrying
-            # an old upsert for a key whose newer tombstone we'd GC here —
-            # the epoch gate only blocks *applied* epochs, so the deleted
-            # row would be resurrected. Cap the horizon below the oldest
-            # outstanding epoch until the gap closes (ADVICE r2).
-            ivs = self._missing_intervals_of(mani["properties"])
-            if ivs:
-                horizon = min(horizon, ivs[0][0] - 1)
-            df = df.filter(
-                ~(F.col("is_deleted") & (F.col("_epoch") <= F.lit(horizon)))
-            )
-        new_version = base_version + 1
-        out_dir = os.path.join(
-            self.path, f"data/v{new_version}-compact-{uuid.uuid4().hex[:8]}")
-        self._data_writer(df, mani).parquet(out_dir)
-        new_files = self._scan_written(out_dir, mani["schema_version"])
-        new_desc = self._write_shard(new_files, nb=nb)
-        for attempt in range(20):
-            self._rewrite_shards(mani, lambda fe: fe["path"] in folded_paths)
-            mani["shards"] = mani["shards"] + [new_desc]
-            mani["version"] = new_version
-            mani["properties"]["has_deltas"] = self._has_multi(mani)
-            # a logical no-op for the LIVE-rows view (LWW fold + tombstone
-            # GC never changes a non-deleted key's winning row) — the change
-            # feed skips this version's files during candidate discovery
-            mani["commit_kind"] = "compact"
-            try:
-                self._commit_manifest(mani)
-                break
-            except CommitConflict:
-                time.sleep(random.uniform(0.005, 0.03) * (attempt + 1))
-                mani = self.manifest(self._latest_version())
-                new_version = mani["version"] + 1
-        else:
-            raise CommitConflict("compact: gave up after 20 retries")
-        return {"compacted_buckets": len(todo), "version": new_version,
-                "retention_horizon": horizon, "ledger_files_folded": folded}
+        return todo
 
     def vacuum(self, keep_versions: int = 2,
                grace_sec: float = 300.0) -> dict:
@@ -2683,6 +2549,13 @@ class LakeTable:
                         removed["shards"] += 1
                     except OSError:
                         pass
+            elif fn.startswith("tmp-") and _old(fp):
+                # a manifest whose writer died before claiming its version
+                try:
+                    os.remove(fp)
+                    removed["manifests"] += 1
+                except OSError:
+                    pass
         self.__dict__.pop("_shard_cache", None)
         removed["retained_versions"] = [max(horizon, 0), latest]
         return removed

@@ -1,5 +1,3 @@
 from skipmap_processor_spark.operators.dedup import (  # noqa: F401
-    lww_dedup,
     prepare_actions,
-    salted_repartition,
 )

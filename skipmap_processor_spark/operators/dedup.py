@@ -1,4 +1,4 @@
-"""Batch preparation: salted LWW dedup + rename-chain resolution.
+"""Batch preparation: LWW dedup + rename-chain resolution.
 
 Turns one epoch's raw change events into one action row per key
 (``op in {upsert, delete}``) ready for ``LakeTable.merge_batch``.
@@ -11,12 +11,10 @@ chains (reference precedent: endpoint-graph component merge,
 /root/reference/src/transforms/normalization/PointGraph.ts:79-131).
 
 Scale design:
-- The LWW dedup is a two-phase window: phase 1 partitions by
-  ``(repo, path, salt)`` where salt = hash(commit, event_seq) % S, so a hot
-  key's events are reduced S-ways in parallel before the final
-  ``(repo, path)`` window sees at most S rows per key. With Zipf-skewed hot
-  repos this bounds the largest window partition — explicit salting per the
-  north rule, on top of AQE.
+- The LWW dedup is ``lake.lww_fold``'s single-exchange form: one window
+  partitioned by ``(_bucket, _salt)``, where ``_salt`` hashes the path. All
+  events of a key share a salt, while a hot repo's paths spread across
+  tasks — explicit salting per the north rule, on top of AQE.
 - Rename resolution is sequential only over the *rename-affected* key set
   (renames are ~5% of events; FIXTURES.md §2). Each ``applyInPandas`` group
   replays its few events through the same ``oracle.apply_event`` function the
@@ -29,11 +27,11 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from skipmap_processor_spark.functions.udfs import content_sha_via_pandas
-from skipmap_processor_spark.lake import KEY_COLS, LakeTable
+from skipmap_processor_spark.lake import KEY_COLS, LakeTable, lww_fold
 
 _ACTION_SCHEMA = (
     "repo string, path string, commit string, event_seq bigint, op string, "
@@ -103,46 +101,6 @@ def batch_profile(events: DataFrame, num_buckets: int) -> dict:
         "affected_buckets": sorted(set(row["b1"] or []) | set(row["b2"] or [])),
         "n_malformed": int(row["nm"] or 0),
     }
-
-
-def salted_repartition(
-    df: DataFrame, num_partitions: int, key: str = "repo", salt: int = 16
-) -> DataFrame:
-    """Repartition by (key, salt) so one hot key spreads over ``salt`` tasks.
-
-    Use ahead of heavy per-partition work when the natural key is skewed
-    (north rule: explicit hot-repo salting, SURVEY.md §4).
-    """
-    return df.repartition(
-        num_partitions, F.col(key), F.pmod(F.xxhash64(F.col("path")), F.lit(salt))
-    )
-
-
-def lww_dedup(events: DataFrame, salt_buckets: int = 8) -> DataFrame:
-    """Last-writer-wins per (repo, path): keep the max-(commit, event_seq) row.
-
-    Two-phase when ``salt_buckets > 1``: a salted partial window bounds skew
-    (map-side-combine analog for argmax), then a final window over the at
-    most ``salt_buckets`` survivors per key.
-    """
-    order = [F.col("commit").desc(), F.col("event_seq").desc()]
-    df = events
-    if salt_buckets > 1:
-        df = df.withColumn(
-            "_salt", F.pmod(F.xxhash64("commit", "event_seq"), F.lit(salt_buckets))
-        )
-        w1 = Window.partitionBy("repo", "path", "_salt").orderBy(*order)
-        df = (
-            df.withColumn("_rn", F.row_number().over(w1))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_salt")
-        )
-    w2 = Window.partitionBy("repo", "path").orderBy(*order)
-    return (
-        df.withColumn("_rn", F.row_number().over(w2))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
 
 
 def rename_components(renames: DataFrame, max_iters: int = 12,
@@ -380,112 +338,80 @@ def _resolve_rename_groups(
     return both.groupBy("_cc").applyInPandas(resolve, schema=_ACTION_SCHEMA)
 
 
-def prepare_actions_fast(
-    events: DataFrame, lake: LakeTable, sha_impl: str = "arrow",
-    files_per_bucket: int = 1
-) -> DataFrame:
-    """Single-exchange action preparation for rename-free batches.
-
-    The general path costs 2-3 exchanges of full rows (content strings are
-    the dominant bytes). Here the ONLY exchange is a window partitioned by
-    ``(_bucket, _salt)`` — the same partitioning the lake write needs — with
-    an in-partition sort by (key, ord desc); a ``lag`` comparison marks each
-    key's first (= winning) row, entirely inside the JVM. Normalization +
-    sha follow as per-row expressions (no further exchange), and the write
-    proceeds without re-shuffling. Returns a DataFrame already partitioned
-    by ``_bucket`` — pass ``pre_partitioned=True`` to ``merge_batch``.
-
-    Skew: the ``_salt`` sub-split hashes the path, which preserves
-    key-completeness (all events of one (repo, path) share a salt) while
-    spreading a hot repo's paths across tasks, and gives the exchange many
-    more keys than slots (hashing nb bucket values into nb slots leaves
-    ~37% slots idle and piles 3-4 buckets on others — measured 3-5x
-    stragglers).
-    """
-    mani = lake.manifest()
-    nb = int(mani["num_buckets"])
-    name_map = lake.payload_name_map(mani)
-    payload = lake.payload_columns(mani)
-    cur_to_orig = {v: k for k, v in name_map.items()}
-
-    from pyspark.sql import Window
-
-    from skipmap_processor_spark.lake import bucket_expr
-
+def _salts(events: DataFrame, num_buckets: int,
+           files_per_bucket: int = 1) -> int:
+    """Salt count of the LWW exchange: enough ``(_bucket, _salt)`` keys to
+    fill every shuffle slot several times over — hashing nb bucket values
+    into nb slots leaves ~37% slots idle and piles 3-4 buckets on others
+    (measured 3-5x stragglers)."""
     shuffle_parts = int(
         events.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
     slot_mult = int(os.environ.get("SKIPMAP_FPB_MULT", "4"))
-    fpb = max(files_per_bucket, -(-slot_mult * shuffle_parts // nb))
-    events = _with_map_extras(events)
-    ev = events.select(
-        *KEY_COLS, "commit", "event_seq", "op", "lang", "content", "extra_cols",
-        bucket_expr(nb).alias("_bucket"),
-        F.pmod(F.xxhash64(F.col("path")), F.lit(fpb)).alias("_salt"),
-    )
-    w = Window.partitionBy("_bucket", "_salt").orderBy(
-        F.col("repo").asc(), F.col("path").asc(),
-        F.col("commit").desc(), F.col("event_seq").desc(),
-    )
-    key = F.concat_ws("\x00", F.col("repo"), F.col("path"))
-    prev = F.lag(key).over(w)
-    deduped = (
-        ev.withColumn("_is_first", prev.isNull() | (prev != key))
-        .filter(F.col("_is_first"))
-        .drop("_is_first", "_salt")
-    )
+    return max(files_per_bucket, -(-slot_mult * shuffle_parts // num_buckets))
 
-    if sha_impl == "jvm":
-        from skipmap_processor_spark.functions.udfs import content_sha_expr
 
-        sha_col = content_sha_expr(F.col("content"))
-    else:
-        from skipmap_processor_spark.functions.udfs import content_sha_via_pandas
-
-        sha_col = content_sha_via_pandas(F.col("content"))
-
-    sels = [F.col(c) for c in KEY_COLS + ["commit", "event_seq"]]
-    sels.append(
-        F.when(F.col("op") == "delete", F.lit("delete"))
-        .otherwise(F.lit("upsert"))
-        .alias("op")
-    )
-    for cur in payload:
+def _lake_payload(lake: LakeTable, mani: dict) -> list:
+    """The lake's current payload columns computed from an event-shaped
+    frame (lang, content, extra_cols), bound by original field name;
+    ``content_sha`` is the Arrow-vectorized normalization + JVM sha2 of
+    ``content`` (the BASELINE.json contract path)."""
+    cur_to_orig = {v: k for k, v in lake.payload_name_map(mani).items()}
+    sels = []
+    for cur in lake.payload_columns(mani):
         orig = cur_to_orig.get(cur, cur)
-        if orig == "lang":
-            sels.append(F.col("lang").alias(cur))
-        elif orig == "content":
-            sels.append(F.col("content").alias(cur))
+        if orig in ("lang", "content"):
+            sels.append(F.col(orig).alias(cur))
         elif orig == "content_sha":
-            sels.append(sha_col.alias(cur))
+            sels.append(content_sha_via_pandas(F.col("content")).alias(cur))
         else:
             sels.append(F.element_at(F.col("extra_cols"), F.lit(orig)).alias(cur))
-    sels.append(F.col("_bucket"))
-    return deduped.select(*sels)
+    return sels
+
+
+def _op_action():
+    """Event op -> action op: deletes stay deletes, every other op upserts."""
+    return (F.when(F.col("op") == "delete", F.lit("delete"))
+            .otherwise(F.lit("upsert")).alias("op"))
+
+
+def prepare_actions_fast(
+    events: DataFrame, lake: LakeTable, files_per_bucket: int = 1
+) -> DataFrame:
+    """Single-exchange action preparation for rename-free batches.
+
+    The ONLY exchange is ``lww_fold``'s bucket form — a window partitioned
+    by ``(_bucket, _salt)``, the same partitioning the lake write needs.
+    Normalization + sha follow as per-row expressions (no further
+    exchange), and the write proceeds without re-shuffling. Returns a
+    DataFrame already partitioned by ``_bucket`` — pass
+    ``pre_partitioned=True`` to ``merge_batch``.
+    """
+    mani = lake.manifest()
+    nb = int(mani["num_buckets"])
+    events = _with_map_extras(events)
+    deduped = lww_fold(
+        events.select(*KEY_COLS, "commit", "event_seq", "op", "lang",
+                      "content", "extra_cols"),
+        num_buckets=nb, salts=_salts(events, nb, files_per_bucket),
+    )
+    return deduped.select(*KEY_COLS, "commit", "event_seq", _op_action(),
+                          *_lake_payload(lake, mani), "_bucket")
 
 
 def prepare_actions(
-    events: DataFrame, lake: LakeTable, salt_buckets: int = 8,
-    sha_impl: str = "arrow", has_renames: bool | None = None
+    events: DataFrame, lake: LakeTable, has_renames: bool | None = None
 ) -> DataFrame:
     """Raw epoch events -> one action row per key, in the lake's current
-    column names, with ``content_sha`` computed.
-
-    ``sha_impl``: 'arrow' = Arrow-vectorized pandas_udf normalization + JVM
-    sha2 (the BASELINE.json contract path); 'jvm' = pure built-in
-    expressions (whole-stage codegen, no Python workers). Both are proven
-    byte-identical in tests/test_udfs.py.
-    """
+    column names, with ``content_sha`` computed."""
     mani = lake.manifest()
-    name_map = lake.payload_name_map(mani)
-    payload = lake.payload_columns(mani)
-    cur_to_orig = {v: k for k, v in name_map.items()}
+    nb = int(mani["num_buckets"])
 
     events = _with_map_extras(events)
     # NOTE on exact duplicate deliveries inside one batch: no dropDuplicates
-    # pass is needed. Verbatim duplicates tie in the LWW window; row_number
-    # keeps exactly one and the tied rows are identical in every column, so
-    # the outcome is deterministic. The rename resolver's ord gate
+    # pass is needed. Verbatim duplicates tie in the LWW window, which keeps
+    # exactly one, and the tied rows are identical in every column, so the
+    # outcome is deterministic. The rename resolver's ord gate
     # (oracle.apply_event: ord <= cur.ord -> skip) handles its slice the same
     # way. Duplicates ACROSS epochs die at the merge ord gate. This saves a
     # full shuffle per epoch.
@@ -524,37 +450,12 @@ def prepare_actions(
         ev_rest = ev
         seq_actions = None
 
-    vec = lww_dedup(ev_rest, salt_buckets=salt_buckets)
-    vec_actions = vec.select(
-        *KEY_COLS,
-        "commit",
-        "event_seq",
-        F.when(F.col("op") == "delete", F.lit("delete"))
-        .otherwise(F.lit("upsert"))
-        .alias("op"),
-        "lang",
-        "content",
-        "extra_cols",
-    )
+    vec_actions = lww_fold(
+        ev_rest, num_buckets=nb, salts=_salts(ev_rest, nb)
+    ).select(*KEY_COLS, "commit", "event_seq", _op_action(),
+             "lang", "content", "extra_cols")
     actions = (
         vec_actions.unionByName(seq_actions) if seq_actions is not None else vec_actions
     )
-
-    # map to current payload column names + digest
-    sels = [F.col(c) for c in KEY_COLS + ["commit", "event_seq", "op"]]
-    for cur in payload:
-        orig = cur_to_orig.get(cur, cur)
-        if orig == "lang":
-            sels.append(F.col("lang").alias(cur))
-        elif orig == "content":
-            sels.append(F.col("content").alias(cur))
-        elif orig == "content_sha":
-            if sha_impl == "jvm":
-                from skipmap_processor_spark.functions.udfs import content_sha_expr
-
-                sels.append(content_sha_expr(F.col("content")).alias(cur))
-            else:
-                sels.append(content_sha_via_pandas(F.col("content")).alias(cur))
-        else:
-            sels.append(F.element_at(F.col("extra_cols"), F.lit(orig)).alias(cur))
-    return actions.select(*sels)
+    return actions.select(*KEY_COLS, "commit", "event_seq", "op",
+                          *_lake_payload(lake, mani))

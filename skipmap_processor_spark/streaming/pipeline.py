@@ -1,7 +1,7 @@
 """Epoch orchestration: binlog tail -> dedup -> MERGE, batch or streaming.
 
 The unit of work is ``apply_epoch``: one micro-batch of change events is
-DDL-evolved, deduped (salted LWW window + rename resolution), digested
+DDL-evolved, deduped (LWW fold + rename resolution), digested
 (Arrow UDF + JVM sha2), and MERGEd into the lake with the epoch HWM gate
 making redelivery a no-op. ``run_stream`` wraps it in Structured Streaming
 ``foreachBatch`` with a checkpoint; ``replay_log`` is the batch-mode loop
@@ -60,8 +60,21 @@ def bootstrap_base(lake: LakeTable, base: DataFrame) -> dict:
     """Load the initial snapshot (base table) into an empty lake table.
 
     Runs as an epoch-less merge: the HWM stays -1 so epoch 0 still applies.
+    The snapshot must hold one row per (repo, path): a duplicated key would
+    otherwise land as two live rows, so it is rejected with ``ValueError``.
     """
     from skipmap_processor_spark.functions.udfs import content_sha_via_pandas
+
+    keyed = F.col("repo").isNotNull() & F.col("path").isNotNull()
+    n = base.agg(F.count(F.when(keyed, 1)).alias("rows"),
+                 F.countDistinct("repo", "path").alias("keys")).first()
+    if n["rows"] != n["keys"]:
+        dup = (base.groupBy("repo", "path").count()
+               .filter(F.col("count") > 1).first())
+        raise ValueError(
+            f"base snapshot has {n['rows'] - n['keys']} duplicate "
+            f"(repo, path) rows; e.g. ({dup['repo']!r}, {dup['path']!r}) "
+            f"appears {dup['count']} times")
 
     actions = base.select(
         "repo",
@@ -81,8 +94,6 @@ def apply_epoch(
     events: DataFrame,
     epoch: int,
     ddl: pd.DataFrame | None = None,
-    salt_buckets: int = 8,
-    sha_impl: str = "arrow",
     on_malformed: str = "error",
 ) -> dict:
     """Apply one epoch exactly once. Safe to call again for any applied epoch.
@@ -191,7 +202,7 @@ def apply_epoch(
             F.max(F.when(~malformed_cond(), F.length("commit")))
             .alias("max_cw"),
         )
-        actions = prepare_actions_fast(ev_obs, lake, sha_impl=sha_impl)
+        actions = prepare_actions_fast(ev_obs, lake)
 
         def valid() -> bool:
             m = obs.get
@@ -217,7 +228,7 @@ def apply_epoch(
     n_quarantined = 0
     if stats is None:
         # general path: one profile pass (extra keys, rename flag, buckets),
-        # schema promotion, salted window dedup + rename resolution
+        # schema promotion, LWW fold + rename resolution
         profile = batch_profile(events, int(mani["num_buckets"]))
         if profile["n_malformed"]:
             from skipmap_processor_spark.streaming.quarantine import (
@@ -311,10 +322,8 @@ def apply_epoch(
                     kept.append(r)
                 LakeTable._set_parked_renames(mani2, kept)
 
-        actions = prepare_actions(
-            events, lake, salt_buckets=salt_buckets, sha_impl=sha_impl,
-            has_renames=profile["has_renames"],
-        )
+        actions = prepare_actions(events, lake,
+                                  has_renames=profile["has_renames"])
         stats = lake.merge_batch(
             actions, epoch, affected_buckets=profile["affected_buckets"],
             post_commit_mutate=park_hook,
@@ -385,16 +394,15 @@ def replay_log(
     lake: LakeTable,
     events: DataFrame,
     ddl: pd.DataFrame | None = None,
-    salt_buckets: int = 8,
-    sha_impl: str = "arrow",
     max_in_flight: int = 1,
     on_malformed: str = "error",
 ) -> list[dict]:
     """Batch-mode replay: epochs through apply_epoch.
 
     ``max_in_flight > 1`` applies that many epochs CONCURRENTLY (backfill /
-    catch-up mode): the MOR merge is an ord-gated CAS append and the CoW
-    merge takes per-bucket locks, so epoch applies commute — the lake's
+    catch-up mode): every merge is an ord-gated LWW fold committed by
+    manifest CAS (a CoW merge that loses a race on its buckets re-runs from
+    the winner's manifest), so epoch applies commute — the lake's
     final state is arrival-order-independent by design (LWW ord total
     order; renames via the parked-rename protocol, finalized by
     resolve_parked after the pool drains). Overlapping epochs fills the
@@ -412,7 +420,7 @@ def replay_log(
                 pool.submit(
                     apply_epoch, lake,
                     events.filter(F.col("epoch") == ep).drop("epoch"),
-                    int(ep), None, salt_buckets, sha_impl, on_malformed,
+                    int(ep), None, on_malformed,
                 )
                 for ep in epochs
             ]
@@ -424,8 +432,7 @@ def replay_log(
     out = []
     for ep in epochs:
         batch = events.filter(F.col("epoch") == ep).drop("epoch")
-        out.append(apply_epoch(lake, batch, int(ep), ddl, salt_buckets,
-                               sha_impl, on_malformed))
+        out.append(apply_epoch(lake, batch, int(ep), ddl, on_malformed))
     return out
 
 
@@ -478,10 +485,8 @@ def run_stream(
     checkpoint_dir: str,
     max_files_per_trigger: int = 1,
     available_now: bool = True,
-    salt_buckets: int = 8,
     on_batch=None,
     compact_every: int = 0,
-    sha_impl: str = "arrow",
     max_in_flight: int = 1,
     on_malformed: str = "error",
     wire_format: str = "parquet",
@@ -583,7 +588,7 @@ def run_stream(
                 futs = [
                     pool.submit(
                         apply_epoch, lake, epoch_rows(ep),
-                        int(ep), None, salt_buckets, sha_impl, on_malformed,
+                        int(ep), None, on_malformed,
                     )
                     for ep in epochs
                 ]
@@ -600,15 +605,8 @@ def run_stream(
                     on_batch(stats)
             return
         for ep in epochs:
-            stats = apply_epoch(
-                lake,
-                epoch_rows(ep),
-                int(ep),
-                ddl,
-                salt_buckets,
-                sha_impl,
-                on_malformed,
-            )
+            stats = apply_epoch(lake, epoch_rows(ep), int(ep), ddl,
+                                on_malformed)
             if (
                 compact_every > 0
                 and not stats.get("skipped")

@@ -125,3 +125,18 @@ def test_e2e_no_rename_fast_path(spark, warehouse):
     bootstrap_base(lake, spark.createDataFrame(base, schema=base_spark_schema()))
     replay_log(spark, lake, _events_to_spark(spark, ev), ddl)
     _assert_equal(_engine_final(lake), replay(base, ev, ddl))
+
+
+@pytest.mark.parametrize("merge_mode", ["cow", "mor"])
+def test_bootstrap_rejects_duplicate_base_keys(spark, warehouse, merge_mode):
+    """A base snapshot holding one (repo, path) twice would land two live
+    rows for it; bootstrap refuses it before anything commits."""
+    lake = LakeTable.create(spark, os.path.join(warehouse, f"dup_{merge_mode}"),
+                            num_buckets=4, merge_mode=merge_mode)
+    base = spark.createDataFrame(
+        [("r1", "a.py", "c1", "python", "x"), ("r1", "b.py", "c1", "python", "y"),
+         ("r1", "a.py", "c2", "python", "z")],
+        "repo string, path string, commit string, lang string, content string")
+    with pytest.raises(ValueError, match=r"1 duplicate .*'r1', 'a.py'.* 2 times"):
+        bootstrap_base(lake, base)
+    assert lake._latest_version() == 0

@@ -73,7 +73,7 @@ def test_pyfiles_zip_submit_batch_replay(spark, tmp_path):
          "--py-files", zip_path, driver,
          "--events-dir", events_dir, "--lake", lake_dir,
          "--mode", "batch", "--merge-mode", "mor", "--num-buckets", "4",
-         "--base-snapshot", base_dir, "--sha-impl", "jvm"],
+         "--base-snapshot", base_dir],
         cwd=str(tmp_path), env=env, capture_output=True, text=True,
         timeout=600,
     )

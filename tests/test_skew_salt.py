@@ -6,8 +6,7 @@ import os
 
 import pandas as pd
 
-from skipmap_processor_spark.lake import LakeTable
-from skipmap_processor_spark.operators.dedup import lww_dedup, salted_repartition
+from skipmap_processor_spark.lake import LakeTable, lww_fold
 from skipmap_processor_spark.sources.events import generate_bulk
 from skipmap_processor_spark.streaming.pipeline import replay_log
 
@@ -19,33 +18,49 @@ def _bulk_df(spark, n_keys=4000, n_events=40000, n_epochs=2):
     return spark.createDataFrame(ev), ev
 
 
-def test_lww_dedup_salt_invariance(spark):
-    """Two-phase salted dedup must equal the single-phase result exactly."""
-    df, _ = _bulk_df(spark)
-    df = df.drop("epoch")
-    a = lww_dedup(df, salt_buckets=1).select("repo", "path", "commit").toPandas()
-    b = lww_dedup(df, salt_buckets=8).select("repo", "path", "commit").toPandas()
-    a = a.sort_values(["repo", "path"]).reset_index(drop=True)
-    b = b.sort_values(["repo", "path"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
+def test_lww_fold_equals_pandas_lww(spark):
+    """Both forms of the LWW kernel (key window; single-exchange salted
+    bucket window) keep exactly the pandas max-(commit, event_seq) row of
+    every key on the hot-repo fixture."""
+    df, ev = _bulk_df(spark)
+    assert (ev["repo"] == ev["repo"].mode()[0]).mean() >= 0.3
+    cols = ["repo", "path", "commit", "event_seq"]
+    want = (ev.sort_values(["commit", "event_seq"], kind="stable")
+            .groupby(["repo", "path"]).tail(1)[cols]
+            .sort_values(["repo", "path"]).reset_index(drop=True))
+    for kw in ({}, {"num_buckets": 8, "salts": 8}):
+        got = (lww_fold(df.drop("epoch"), **kw).select(*cols).toPandas()
+               .sort_values(["repo", "path"]).reset_index(drop=True))
+        pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
-def test_salted_repartition_balances_hot_repo(spark):
-    """One repo holds >=35% of rows; salted repartition must spread it so no
-    partition exceeds ~2x the mean row count."""
+def test_lww_fold_salts_balance_hot_repo(spark):
+    """One repo holds >=30% of events; the kernel's (_bucket, _salt)
+    exchange must spread it so no partition's input exceeds 2.5x the mean.
+    A partition's input is the events of the keys whose winners it emits
+    (the window stage has no later exchange)."""
+    from pyspark.sql import functions as F
+
     df, ev = _bulk_df(spark, n_keys=2000, n_events=40000)
     hot_share = (ev["repo"] == ev["repo"].mode()[0]).mean()
     assert hot_share >= 0.3, "fixture must actually be skewed"
     n_parts = 16
-    out = salted_repartition(df, n_parts, key="repo", salt=16)
-    from pyspark.sql import functions as F
-
-    sizes = (
-        out.withColumn("pid", F.spark_partition_id())
-        .groupBy("pid")
-        .count()
-        .toPandas()["count"]
-    )
+    conf = {"spark.sql.shuffle.partitions": str(n_parts),
+            "spark.sql.adaptive.enabled": "false"}
+    saved = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        won = (lww_fold(df.drop("epoch"), num_buckets=8, salts=16)
+               .select("repo", "path", F.spark_partition_id().alias("pid"))
+               .toPandas())
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    per_key = ev.groupby(["repo", "path"]).size().rename("n").reset_index()
+    sizes = (won.merge(per_key, on=["repo", "path"]).groupby("pid")["n"]
+             .sum().reindex(range(n_parts), fill_value=0))
+    assert sizes.sum() == len(ev)
     assert sizes.max() <= 2.5 * sizes.mean(), (
         f"straggler partition: max={sizes.max()} mean={sizes.mean():.0f}"
     )
